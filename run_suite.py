@@ -16,6 +16,7 @@ Usage:
     python run_suite.py            # parallel, J=4 groups, local[8] each
     python run_suite.py -j 1      # sequential, the hypothesis test
     python run_suite.py -j 4 -n 8 # 8 groups, 4 at a time
+    python run_suite.py --durations=40  # unknown flags go to pytest
 
 CPU budget: each group's session gets SPARK_GRAFT_CPUS = 32 // J
 threads so concurrent groups never oversubscribe the box (the exact
@@ -96,7 +97,10 @@ def main() -> int:
     ap.add_argument("-n", "--groups", type=int, default=None)
     ap.add_argument("-j", "--jobs", type=int, default=4)
     ap.add_argument("pytest_args", nargs="*", help="extra pytest args, e.g. --durations=40")
-    args = ap.parse_args()
+    # flags this parser does not know (--durations=40, -x, ...) go to
+    # pytest as well
+    args, unknown = ap.parse_known_args()
+    pytest_args = args.pytest_args + unknown
     n = args.groups or args.jobs
     cpus = max(2, int(os.environ.get("SPARK_GRAFT_CPUS", "32")) // args.jobs)
     groups = _groups(n)
@@ -104,7 +108,7 @@ def main() -> int:
     with ThreadPoolExecutor(max_workers=args.jobs) as ex:
         results = list(
             ex.map(
-                lambda t: _run_group(t[0], t[1], cpus, args.pytest_args),
+                lambda t: _run_group(t[0], t[1], cpus, pytest_args),
                 enumerate(groups),
             )
         )

@@ -79,6 +79,14 @@ def count_jobs(spark, fn) -> int:
     return len(measured_jobs(spark, fn))
 
 
+def query_jobs(spark, query) -> list:
+    """The jobs a streaming query's micro-batches submitted, as
+    ``(jobId, text)`` pairs: the engine runs every trigger, its
+    ``foreachBatch`` body included, under the query's run-id group."""
+    _drain_listeners(spark)
+    return _group_jobs(spark, str(query.runId))
+
+
 def listing_jobs(spark, fn) -> list:
     """The file-listing jobs ``fn()`` submits (InMemoryFileIndex
     stamps 'Listing leaf files and directories for N paths')."""

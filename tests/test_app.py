@@ -217,3 +217,49 @@ def test_expectations_feed_the_same_reject_ledger(spark, dirs):
         for r in spark.read.parquet(dirs["rejects"]).collect()
     )
     assert reasons == ["invalid_msg_type", "not_null:session_id"]
+
+
+
+def test_trigger_is_two_jobs_over_one_scan(spark, dirs):
+    """One trigger with the ledger on runs the delivery job for every
+    filter and then the ledger write -- not a job per filter -- over
+    one persisted read of the batch, so M4 (numInputRows) and M5 (the
+    observed batch size) equal the batch's input rows, not twice
+    that."""
+    from tests.jobcount import query_jobs
+    from xmidt_event_streams_spark.streaming.metrics import (
+        GAUGE_BATCH_SIZE,
+        GAUGE_WAITING,
+        GaugeListener,
+    )
+
+    events = (
+        [_evt(i, "event:device-status/mac:1/online") for i in range(2)]
+        + [_evt(10 + i, "event:boot-time/mac:2/x") for i in range(2)]
+        + [_evt(20 + i, "event:boot-time/mac:2/x", msg_type=3) for i in range(2)]
+    )
+    _write(os.path.join(dirs["src"], "b1.json"), events)
+    listener = GaugeListener()
+    spark.streams.addListener(listener)
+    try:
+        q = run_app(
+            spark, dirs["cfg"], dirs["src"], dirs["ckpt"],
+            sink_root=dirs["sink"], rejects_path=dirs["rejects"],
+            availableNow=True, query_name="app-one-scan",
+        )
+        await_stream(q, 180)
+        listener.wait_for(GAUGE_BATCH_SIZE, timeout_s=30)
+    finally:
+        spark.streams.removeListener(listener)
+    assert len([p for p in q.recentProgress if p.numInputRows > 0]) == 1
+    jobs = query_jobs(spark, q)
+    assert 1 <= len(jobs) <= 2, jobs
+    gauges = {
+        r.gauge: r.value
+        for r in listener.records()
+        if r.query_name == "app-one-scan" and r.value > 0
+    }
+    assert gauges == {GAUGE_WAITING: len(events), GAUGE_BATCH_SIZE: len(events)}
+    assert len(_delivered(dirs["sink"], "status-stream")) == 2
+    assert len(_delivered(dirs["sink"], "boot-stream")) == 2
+    assert spark.read.parquet(dirs["rejects"]).count() == 2

@@ -3,11 +3,17 @@ filter/stream_dispatcher_test.go + internal/sender/kinesis_sender_test.go
 (failover order, retry, partial failure) against the Python writer.
 """
 
+import json
+
+import pytest
 from pyspark.sql import functions as F
 
+from tests.jobcount import count_jobs
 from xmidt_event_streams_spark.config import FilterConfig
+from xmidt_event_streams_spark.enrich import fix_wrp
 from xmidt_event_streams_spark.operators.batching import assign_batches, chunk_local
 from xmidt_event_streams_spark.sinks.writer import (
+    DirSender,
     DirSenderFactory,
     MemorySender,
     deliver_batch,
@@ -85,6 +91,10 @@ class TestDelivery:
         res = deliver_batch(_items(5), ("p", "a"), s, retries=2, retry_interval_s=0)
         assert res.dropped == 5 and res.delivered == 0
         assert res.failed_streams == ["p", "a"]
+        # every put raised (MemorySender raises IOError, i.e. OSError):
+        # each is counted and the first one's type kept
+        assert res.attempts == 4 and res.raised == 4
+        assert res.first_error == "OSError"
 
     def test_partial_failure_retries_whole_chunk(self):
         """kinesis_sender.go:103-116: FailedRecordCount>0 is an error;
@@ -94,6 +104,8 @@ class TestDelivery:
         assert res.delivered == 2
         assert len(s.records["alt"]) == 2
         assert [st for st, _ in s.calls] == ["p", "p", "alt"]
+        # returned failures are failed puts, not raised ones
+        assert res.raised == 0 and res.first_error is None
 
     def test_retry_then_recover(self):
         """kinesis_sender_test.go:227-304: transient error recovers
@@ -103,10 +115,38 @@ class TestDelivery:
         assert res.delivered == 1 and res.attempts == 2
 
 
+def _down_dir_factory(root, down):
+    """Picklable factory: DirSender puts, except that every put to a
+    stream in ``down`` raises OSError."""
+
+    def factory():
+        class _Down(DirSender):
+            def put_records(self, items, stream):
+                if stream in down:
+                    raise OSError(f"stream {stream} unavailable")
+                return DirSender.put_records(self, items, stream)
+
+        return _Down(root)
+
+    return factory
+
+
+def _read_sink(root):
+    """stream -> [(partition_key, payload dict)] under a DirSender root."""
+    out = {}
+    for d in root.iterdir():
+        for p in d.iterdir():
+            with open(p) as f:
+                for line in f:
+                    r = json.loads(line)
+                    out.setdefault(d.name, []).append(
+                        (r["partition_key"], json.loads(r["data"]))
+                    )
+    return out
+
+
 class TestRouteAndDeliver:
     def test_batch_fanout_serialize_deliver(self, spark, tmp_path):
-        import json
-
         df = spark.createDataFrame(
             [
                 ("event:device-status/m1", "mac:1", "sess-1"),
@@ -118,7 +158,10 @@ class TestRouteAndDeliver:
             FilterConfig("dev-stream", events=("device-status.*",)),
             FilterConfig("all-stream", events=(".*",)),
         )
-        route_and_deliver(df, filters, DirSenderFactory(str(tmp_path)), retry_interval_s=0)
+        res = route_and_deliver(
+            df, filters, DirSenderFactory(str(tmp_path)), retry_interval_s=0
+        )
+        assert res.delivered == 3 and res.dropped == 0 and res.raised == 0
         by_stream = {}
         for d in tmp_path.iterdir():
             for p in d.iterdir():
@@ -133,3 +176,93 @@ class TestRouteAndDeliver:
         pk, payload = by_stream["dev-stream"][0]
         assert pk == "sess-1"  # K2: partition key = session id
         assert '"dest":"event:device-status/m1"' in payload  # K1 JSON
+
+    @pytest.mark.parametrize("n_filters", [1, 3, 8])
+    def test_one_spark_job_whatever_the_filter_count(self, spark, tmp_path, n_filters):
+        df = spark.createDataFrame(
+            [(f"event:device-status/m{i}", f"mac:{i}", f"sess-{i}") for i in range(6)],
+            "dest string, source string, session_id string",
+        )
+        filters = [FilterConfig(f"s{i}", events=(".*",)) for i in range(n_filters)]
+        results = []
+        jobs = count_jobs(
+            spark,
+            lambda: results.append(
+                route_and_deliver(
+                    df, filters, DirSenderFactory(str(tmp_path)), retry_interval_s=0
+                )
+            ),
+        )
+        assert jobs == 1
+        assert results[0].delivered == 6 * n_filters
+
+    def test_accounting_sums_partitions_and_filters(self, spark, tmp_path):
+        """The returned result sums every (partition, filter) row: drops,
+        attempts and the typed sender failures reach the driver."""
+        rows = [(f"event:device-status/m{i}", f"mac:{i}", f"sess-{i}") for i in range(4)]
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 2),
+            "dest string, source string, session_id string",
+        )
+        filters = (
+            FilterConfig("up", events=(".*",)),
+            FilterConfig("down", events=("device-status.*",)),
+        )
+        res = route_and_deliver(
+            df, filters, _down_dir_factory(str(tmp_path), {"down"}), retry_interval_s=0
+        )
+        assert res.delivered == 4 and res.dropped == 4
+        # one chunk per (partition, filter): 3 tries on the down
+        # stream, one on the healthy one, in each of the 2 partitions
+        assert res.failed_streams == ["down", "down"]
+        assert res.raised == 6 and res.attempts == 8
+        assert res.first_error == "OSError"
+        assert len(_read_sink(tmp_path)["up"]) == 4
+
+    def test_filled_uuid_is_the_same_on_every_matched_stream(self, spark, tmp_path):
+        """fix_wrp fills an empty transaction_uuid with uuid(); an event
+        that matches two filters must carry ONE filled uuid to both
+        streams, not one uuid per (event, filter) pair."""
+        df = spark.createDataFrame(
+            [("event:device-status/m1", "mac:1", "sess-1", "", "application/json")],
+            "dest string, source string, session_id string, "
+            "transaction_uuid string, content_type string",
+        )
+        filters = (
+            FilterConfig("a", events=("device-status.*",)),
+            FilterConfig("b", events=(".*",)),
+        )
+        route_and_deliver(
+            fix_wrp(df), filters, DirSenderFactory(str(tmp_path)), retry_interval_s=0
+        )
+        sink = _read_sink(tmp_path)
+        uuids = {s: [p["transaction_uuid"] for _, p in sink[s]] for s in ("a", "b")}
+        assert len(uuids["a"]) == 1 and len(uuids["b"]) == 1
+        assert uuids["a"][0] not in ("", None)
+        assert uuids["a"] == uuids["b"]
+
+    def test_shared_primary_fails_over_to_each_filters_own_alts(self, spark, tmp_path):
+        """Two filters with the same primary stream and different alts:
+        when the primary is down, each filter's events go to ITS alt."""
+        df = spark.createDataFrame(
+            [
+                ("event:device-status/m1", "mac:1", "sess-1"),
+                ("event:boot-time/m2", "mac:2", "sess-2"),
+            ],
+            "dest string, source string, session_id string",
+        )
+        filters = (
+            FilterConfig("shared", events=("device-status.*",), alt_streams=("alt-a",)),
+            FilterConfig("shared", events=("boot-time.*",), alt_streams=("alt-b",)),
+        )
+        res = route_and_deliver(
+            df, filters, _down_dir_factory(str(tmp_path), {"shared"}), retry_interval_s=0
+        )
+        sink = _read_sink(tmp_path)
+        assert set(sink) == {"alt-a", "alt-b"}
+        assert [p["dest"] for _, p in sink["alt-a"]] == ["event:device-status/m1"]
+        assert [p["dest"] for _, p in sink["alt-b"]] == ["event:boot-time/m2"]
+        assert res.delivered == 2 and res.dropped == 0
+        # each filter's one chunk tried the primary 3 times, then its alt
+        assert res.failed_streams == ["shared", "shared"]
+        assert res.raised == 6 and res.first_error == "OSError"

@@ -7,10 +7,16 @@ Spark building blocks.
 (streams_only.yaml shape -- or a parsed dict, or compiled
 FilterConfigs) and stands up the full data plane:
 
-    durable source -> V3/V4/V7 reject split (rejects to their own
-    ledger sink, idempotent per batch) -> V6 fixWrp enrichment ->
-    R1-R4 regex fan-out -> B6/K6 chunked delivery with K3 retry /
-    K4 failover -> M4/M5 gauges observed per trigger.
+    durable source -> batch persisted once -> V3/V4/V7 reject split
+    -> V6 fixWrp enrichment -> R1-R4 regex fan-out -> B6/K6 chunked
+    delivery with K3 retry / K4 failover -> reject ledger write
+    (idempotent per batch) -> M4/M5 gauges observed per trigger.
+
+Each trigger runs two Spark jobs over one cached read of its batch:
+the delivery job (every filter in one pass, ``route_and_deliver``)
+and then the ledger write, which stays off the delivery latency path.
+The source scan, and with it the M4/M5 gauges, counts each input row
+once.
 
 One streaming query, one checkpoint: the reject split and delivery
 happen inside the same micro-batch transaction, so a replayed batch
@@ -111,30 +117,36 @@ def run_app(
         stream = with_gauges(stream, name=query_name)
 
     def _process(batch_df, batch_id: int) -> None:
-        tagged = classify_rejects(batch_df, required_cols=required_cols)
-        accepted = tagged.filter(F.col("reject_reason") == "")
-        rejected = tagged.filter(F.col("reject_reason") != "")
-        if expectations:
-            from xmidt_event_streams_spark.expectations import (
-                VIOLATIONS_COL,
-                with_violations,
-            )
+        # the reject split, the delivery and the ledger all read this
+        # one cached relation: the source is scanned once per trigger
+        batch_df.persist()
+        try:
+            tagged = classify_rejects(batch_df, required_cols=required_cols)
+            accepted = tagged.filter(F.col("reject_reason") == "")
+            rejected = tagged.filter(F.col("reject_reason") != "")
+            if expectations:
+                from xmidt_event_streams_spark.expectations import (
+                    VIOLATIONS_COL,
+                    with_violations,
+                )
 
-            ann = with_violations(
-                accepted.drop("reject_reason"), expectations
+                ann = with_violations(
+                    accepted.drop("reject_reason"), expectations
+                )
+                bad = ann.filter(F.size(VIOLATIONS_COL) > 0).withColumn(
+                    "reject_reason", F.concat_ws(",", F.col(VIOLATIONS_COL))
+                ).drop(VIOLATIONS_COL)
+                rejected = rejected.unionByName(bad)
+                accepted = ann.filter(F.size(VIOLATIONS_COL) == 0).drop(
+                    VIOLATIONS_COL
+                ).withColumn("reject_reason", F.lit(""))
+            route_and_deliver(
+                fix_wrp(accepted.drop("reject_reason")), filters, sender_factory
             )
-            bad = ann.filter(F.size(VIOLATIONS_COL) > 0).withColumn(
-                "reject_reason", F.concat_ws(",", F.col(VIOLATIONS_COL))
-            ).drop(VIOLATIONS_COL)
-            rejected = rejected.unionByName(bad)
-            accepted = ann.filter(F.size(VIOLATIONS_COL) == 0).drop(
-                VIOLATIONS_COL
-            ).withColumn("reject_reason", F.lit(""))
-        if rejects_path is not None:
-            idempotent_batch_append(rejected, batch_id, rejects_path)
-        route_and_deliver(
-            fix_wrp(accepted.drop("reject_reason")), filters, sender_factory
-        )
+            if rejects_path is not None:
+                idempotent_batch_append(rejected, batch_id, rejects_path)
+        finally:
+            batch_df.unpersist()
 
     writer = stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir

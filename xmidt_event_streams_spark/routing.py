@@ -207,7 +207,7 @@ def route_union(
         # operator node (~0.09 s per build at the default filter set).
         # Config patterns travel as lossless \uXXXX literals
         # (sql_string_literal above).
-        matched_sql = _matched_streams_sql(filters, stripped_col, source)
+        matched_sql = matched_streams_sql(filters, stripped_col, source)
         return (
             df.selectExpr(
                 "*",
@@ -236,14 +236,25 @@ def route_union(
     )
 
 
-def _matched_streams_sql(
-    filters: Iterable[FilterConfig], stripped_col: str, source: str
+def matched_streams_sql(
+    filters: Iterable[FilterConfig],
+    stripped_col: str,
+    source: str,
+    labels: Iterable[str] | None = None,
 ) -> str:
     """The matched-streams array expression in SQL text: the exact
     SQL-text twin of the Column composition in :func:`route_union`
-    (array_compact over one CASE per filter)."""
+    (array_compact over one CASE per filter).
+
+    ``labels`` are the SQL literals the array holds, one per filter in
+    filter order; the default is each filter's stream name.
+    ``sinks.writer.route_and_deliver`` passes filter ordinals instead,
+    since two filters may share a primary stream but not their alts."""
+    filters = list(filters)
+    if labels is None:
+        labels = [sql_string_literal(fc.stream_name) for fc in filters]
     items = []
-    for fc in filters:
+    for fc, label in zip(filters, labels):
         ev = " OR ".join(
             f"`{stripped_col}` rlike {sql_string_literal(p)}"
             for p in fc.events
@@ -257,9 +268,7 @@ def _matched_streams_sql(
                 for p in matchers
             )
             pred = f"{pred} AND ({dv})"
-        items.append(
-            f"CASE WHEN {pred} THEN {sql_string_literal(fc.stream_name)} END"
-        )
+        items.append(f"CASE WHEN {pred} THEN {label} END")
     return f"array_compact(array({', '.join(items)}))"
 
 

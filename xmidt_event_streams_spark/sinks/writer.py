@@ -16,11 +16,12 @@ Semantics reproduced:
   K6  chunking            -- <= 500 records per put
       (internal/kinesis/kinesis.go:27).
 
-Senders are small picklable objects used from ``foreachPartition``:
-one instance per executor partition, bounded buffering, no driver
-round-trips. ``DirSender`` writes JSON-lines files per stream (the
-integration-testable sink, mirroring the reference's read-back
-integration pattern); ``KinesisSender`` is gated behind boto3.
+Senders are small picklable objects used from ``route_and_deliver``'s
+partition pass: one instance per executor partition, bounded
+buffering, no driver round-trips. ``DirSender`` writes JSON-lines
+files per stream (the integration-testable sink, mirroring the
+reference's read-back integration pattern); ``KinesisSender`` is
+gated behind boto3.
 """
 
 from __future__ import annotations
@@ -195,12 +196,30 @@ class DirSenderFactory:
 
 @dataclass
 class DeliveryResult:
-    """Per-batch delivery accounting (the M2/M5/M6 metric sources)."""
+    """Per-batch delivery accounting (the M2/M5/M6 metric sources).
+
+    ``raised`` counts the puts that raised (transport errors, as
+    opposed to puts that returned failed records); ``first_error`` is
+    the class name of the first such exception, None when none did.
+    Results add: ``route_and_deliver`` returns the sum over its
+    partitions and filters."""
 
     delivered: int = 0
     dropped: int = 0
     attempts: int = 0
     failed_streams: list[str] = field(default_factory=list)
+    raised: int = 0
+    first_error: str | None = None
+
+    def __add__(self, other: "DeliveryResult") -> "DeliveryResult":
+        return DeliveryResult(
+            self.delivered + other.delivered,
+            self.dropped + other.dropped,
+            self.attempts + other.attempts,
+            self.failed_streams + other.failed_streams,
+            self.raised + other.raised,
+            self.first_error or other.first_error,
+        )
 
 
 def deliver_batch(
@@ -213,7 +232,8 @@ def deliver_batch(
 ) -> DeliveryResult:
     """K3-K6: chunk, then per chunk try each stream in order with
     fixed-interval retries; all-fail -> chunk dropped and counted
-    (reference: filter/stream_dispatcher.go:39-105)."""
+    (reference: filter/stream_dispatcher.go:39-105). A put that raises
+    counts as a wholly failed put, and is counted in ``raised``."""
     res = DeliveryResult()
     for chunk in chunk_local(items, chunk_size):
         delivered = False
@@ -223,8 +243,11 @@ def deliver_batch(
                 res.attempts += 1
                 try:
                     failed = sender.put_records(chunk, stream)
-                except Exception:
+                except Exception as exc:
                     failed = len(chunk)
+                    res.raised += 1
+                    if res.first_error is None:
+                        res.first_error = type(exc).__name__
                 if failed == 0:
                     ok = True
                     break
@@ -249,40 +272,63 @@ def route_and_deliver(
     key_col: str = "session_id",
     dest_col: str = "dest",
     source_col: str = "source",
-) -> None:
+) -> DeliveryResult:
     """The foreachBatch body: fan-out + serialize declaratively
-    (JVM-side), deliver imperatively (executor-side Python).
+    (JVM-side), deliver imperatively (executor-side Python), in ONE
+    Spark job whatever the filter count.
 
-    Scale shape: the batch is persisted once and each filter branch is
-    a narrow filter+project over it -- no shuffle anywhere; delivery
-    parallelism = partition count per branch. ``sender_factory`` is a
-    picklable zero-arg callable constructed per partition (no shared
-    driver state).
+    Scale shape: one narrow projection serializes each row once into
+    its (pk, payload) pair and evaluates every filter's predicate into
+    the row's array of matched filter ordinals (``route_union``'s
+    matched-array shape; ordinals rather than stream names, since two
+    filters may share a primary stream but not their alts). A single
+    ``mapPartitions`` pass groups each partition's rows by filter and
+    calls :func:`deliver_batch` once per filter with that filter's
+    ``streams_in_order``. No shuffle, no explode: a row matched by
+    several filters carries the same payload to each, and delivery
+    parallelism = partition count. The pass returns one
+    :class:`DeliveryResult` per (partition, filter) to the driver; the
+    call returns their sum. (Not an Arrow pass such as
+    ``mapInPandas``: that loads pandas and pyarrow into every Python
+    worker, about 50 MB of resident memory each, to move a few
+    thousand string pairs per trigger.)
+
+    The input is read once, so a caller that runs other actions over
+    the same batch persists it first (``app._process`` does).
+    ``sender_factory`` is a picklable zero-arg callable constructed
+    once per partition (no shared driver state).
     """
     from pyspark.sql import functions as F
 
-    from xmidt_event_streams_spark.routing import compile_filters
+    from xmidt_event_streams_spark.routing import (
+        matched_streams_sql,
+        strip_event_prefix,
+    )
 
-    batch_df.persist()
-    try:
-        for fc, pred in compile_filters(filters, dest_col, source_col):
-            serialized = (
-                batch_df.filter(pred)
-                .select(
-                    F.col(key_col).cast("string").alias("pk"),
-                    F.to_json(F.struct(*batch_df.columns)).alias("payload"),
+    filters = tuple(filters)
+    orders = [fc.streams_in_order for fc in filters]
+    matched = matched_streams_sql(
+        filters, "stripped", "source", labels=map(str, range(len(filters)))
+    )
+    routed = batch_df.select(
+        F.col(key_col).cast("string").alias("pk"),
+        F.to_json(F.struct(*batch_df.columns)).alias("payload"),
+        F.col(source_col).alias("source"),
+        strip_event_prefix(dest_col).alias("stripped"),
+    ).selectExpr("pk", "payload", f"{matched} AS matched")
+
+    def _deliver(rows):
+        by_filter: list[list[tuple[str, str]]] = [[] for _ in orders]
+        for pk, payload, hits in rows:
+            for i in hits:
+                by_filter[i].append((pk, payload))
+        sender = None
+        for items, streams in zip(by_filter, orders):
+            if items:
+                if sender is None:
+                    sender = sender_factory()
+                yield deliver_batch(
+                    items, streams, sender, retries, retry_interval_s
                 )
-            )
-            streams = fc.streams_in_order
 
-            def _deliver(part_iter, _streams=streams):
-                sender = sender_factory()
-                items = [(r["pk"], r["payload"]) for r in part_iter]
-                if items:
-                    deliver_batch(
-                        items, _streams, sender, retries, retry_interval_s
-                    )
-
-            serialized.foreachPartition(_deliver)
-    finally:
-        batch_df.unpersist()
+    return sum(routed.rdd.mapPartitions(_deliver).collect(), DeliveryResult())

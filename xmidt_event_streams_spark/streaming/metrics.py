@@ -53,8 +53,10 @@ def with_gauges(df: DataFrame, name: str = "queue") -> DataFrame:
     multiple actions over an unpersisted batch re-executes the scan
     and multiplies the gauge (8 rows consumed by two actions reads as
     16). Persist the batch before fanning out -- the cached relation
-    replaces the subtree and the gauge counts once
-    (tests/test_pipeline_e2e.py demonstrates both)."""
+    replaces the subtree and the gauge counts once. ``app._process``
+    does this: its delivery and its reject-ledger write both read the
+    one persisted batch (tests/test_app.py pins the 1x gauges;
+    tests/test_pipeline_e2e.py shows the persisted pattern)."""
     return df.observe(
         _OBS_PREFIX + name, F.count(F.lit(1)).alias(GAUGE_BATCH_SIZE)
     )
