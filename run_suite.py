@@ -13,15 +13,16 @@ shared-warehouse race the r9 verdict warned about does not apply to
 process-per-group isolation).
 
 Usage:
-    python run_suite.py            # parallel, J=4 groups, local[8] each
+    python run_suite.py            # parallel, J=4 groups, local[max(2, cores // 4)] each
     python run_suite.py -j 1      # sequential, the hypothesis test
     python run_suite.py -j 4 -n 8 # 8 groups, 4 at a time
     python run_suite.py --durations=40  # unknown flags go to pytest
 
-CPU budget: each group's session gets SPARK_GRAFT_CPUS = 32 // J
-threads so concurrent groups never oversubscribe the box (the exact
-regime that flaked r8's suite). Exit code: nonzero if any group
-fails; per-group wall + tallies printed at the end.
+CPU budget: each group's session gets SPARK_GRAFT_CPUS // J threads
+(at least 2), where SPARK_GRAFT_CPUS defaults to the cores this
+process may run on, so concurrent groups never oversubscribe the box
+(the exact regime that flaked r8's suite). Exit code: nonzero if any
+group fails; per-group wall + tallies printed at the end.
 """
 
 from __future__ import annotations
@@ -102,7 +103,8 @@ def main() -> int:
     args, unknown = ap.parse_known_args()
     pytest_args = args.pytest_args + unknown
     n = args.groups or args.jobs
-    cpus = max(2, int(os.environ.get("SPARK_GRAFT_CPUS", "32")) // args.jobs)
+    budget = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    cpus = max(2, int(budget) // args.jobs)
     groups = _groups(n)
     t0 = time.perf_counter()
     with ThreadPoolExecutor(max_workers=args.jobs) as ex:

@@ -4,6 +4,8 @@ filter/stream_dispatcher_test.go + internal/sender/kinesis_sender_test.go
 """
 
 import json
+import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +14,7 @@ from tests.jobcount import count_jobs
 from xmidt_event_streams_spark.config import FilterConfig
 from xmidt_event_streams_spark.enrich import fix_wrp
 from xmidt_event_streams_spark.operators.batching import assign_batches, chunk_local
+from xmidt_event_streams_spark.sinks import writer
 from xmidt_event_streams_spark.sinks.writer import (
     DirSender,
     DirSenderFactory,
@@ -114,6 +117,20 @@ class TestDelivery:
         res = deliver_batch(_items(1), ("p",), s, retries=3, retry_interval_s=0)
         assert res.delivered == 1 and res.attempts == 2
 
+    @pytest.mark.parametrize(
+        "streams, sleeps", [(("p",), 2), (("p", "alt"), 4)]
+    )
+    def test_interval_slept_only_between_attempts(self, monkeypatch, streams, sleeps):
+        """K3: 3 attempts on a down stream are 2 intervals apart, and
+        no interval follows a stream's last attempt, whether the next
+        step is an alt stream or the drop."""
+        naps = []
+        monkeypatch.setattr(writer.time, "sleep", naps.append)
+        s = MemorySender(fail_streams=set(streams))
+        res = deliver_batch(_items(2), streams, s, retries=3, retry_interval_s=0.01)
+        assert res.dropped == 2 and res.attempts == 3 * len(streams)
+        assert naps == [0.01] * sleeps
+
 
 def _down_dir_factory(root, down):
     """Picklable factory: DirSender puts, except that every put to a
@@ -127,6 +144,29 @@ def _down_dir_factory(root, down):
                 return DirSender.put_records(self, items, stream)
 
         return _Down(root)
+
+    return factory
+
+
+def _rendezvous_factory(root, marker, waiter, signaller, timeout_s=2.0):
+    """Picklable factory: a put to ``waiter`` polls for the ``marker``
+    file that only a put to ``signaller`` writes, and fails its records
+    if the marker does not appear within ``timeout_s``."""
+
+    def factory():
+        class _Rendezvous(DirSender):
+            def put_records(self, items, stream):
+                if stream == signaller:
+                    open(marker, "w").close()
+                elif stream == waiter:
+                    deadline = time.monotonic() + timeout_s
+                    while not os.path.exists(marker):
+                        if time.monotonic() > deadline:
+                            return len(items)
+                        time.sleep(0.01)
+                return DirSender.put_records(self, items, stream)
+
+        return _Rendezvous(root)
 
     return factory
 
@@ -240,6 +280,33 @@ class TestRouteAndDeliver:
         assert len(uuids["a"]) == 1 and len(uuids["b"]) == 1
         assert uuids["a"][0] not in ("", None)
         assert uuids["a"] == uuids["b"]
+
+    def test_filters_of_a_partition_deliver_concurrently(self, spark, tmp_path):
+        """One partition, two filters: the first filter's put waits for
+        a file that only the second filter's put writes. Delivered one
+        filter after the other, the wait times out and the chunk drops;
+        delivered concurrently, both chunks arrive."""
+        rows = [
+            ("event:device-status/m1", "mac:1", "sess-1"),
+            ("event:boot-time/m2", "mac:2", "sess-2"),
+        ]
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 1),
+            "dest string, source string, session_id string",
+        )
+        filters = (
+            FilterConfig("waits", events=("device-status.*",)),
+            FilterConfig("signals", events=("boot-time.*",)),
+        )
+        sink_root = tmp_path / "sink"
+        factory = _rendezvous_factory(
+            str(sink_root), str(tmp_path / "signalled"), "waits", "signals"
+        )
+        res = route_and_deliver(df, filters, factory, retries=1, retry_interval_s=0)
+        assert res.dropped == 0 and res.delivered == 2
+        sink = _read_sink(sink_root)
+        assert [p["dest"] for _, p in sink["waits"]] == ["event:device-status/m1"]
+        assert [p["dest"] for _, p in sink["signals"]] == ["event:boot-time/m2"]
 
     def test_shared_primary_fails_over_to_each_filters_own_alts(self, spark, tmp_path):
         """Two filters with the same primary stream and different alts:

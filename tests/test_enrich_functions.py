@@ -3,6 +3,7 @@ time functions, and text/vector function edge cases."""
 
 import math
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from xmidt_event_streams_spark.enrich import (
@@ -177,6 +178,22 @@ class TestTextFunctions:
         )
         assert sql_rows == kern_rows
         assert len(sql_rows) == 4  # docs 2 and 4 absent from both
+
+    @pytest.mark.parametrize("id_type", ["double", "string"])
+    def test_minhash_kernel_rejects_non_integral_ids(self, spark, id_type):
+        """The kernel's ids are int64: a double id would be truncated
+        (1.7 -> 1) and a string id would fail inside the Python worker,
+        so both are refused when the plan is built."""
+        from xmidt_event_streams_spark.operators.dedup import (
+            minhash_signatures_kernel,
+        )
+
+        doc_id = 1.7 if id_type == "double" else "doc-1"
+        df = spark.createDataFrame(
+            [(doc_id, "fast filter faceff fluff")], f"doc_id {id_type}, t string"
+        )
+        with pytest.raises(TypeError, match=f"integral 'doc_id'.*{id_type}"):
+            minhash_signatures_kernel(df, "t", "doc_id")
 
     def test_lang_id_stopwords(self, spark):
         df = spark.createDataFrame(

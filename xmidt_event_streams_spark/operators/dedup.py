@@ -249,6 +249,17 @@ def minhash_signatures_kernel(
 
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import IntegralType
+
+    # The kernel emits int64 ids: check the input schema here rather
+    # than truncating a double id (1.7 -> 1) or failing on a string id
+    # inside the Python worker.
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"minhash_signatures_kernel requires integral {id_col!r} ids "
+            f"(got {id_type.simpleString()})"
+        )
 
     coeffs = _mh_coeffs(num_hashes)
     n = shingle_n

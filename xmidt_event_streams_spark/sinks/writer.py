@@ -5,9 +5,9 @@ Semantics reproduced:
   K1  JSON serialization  -- to_json(struct(*)) on the JVM side; the
       writer only ever sees (partition_key, json_string) pairs.
   K2  partition key       -- session id rides with each item.
-  K3  fixed-interval retry-- ``retries`` attempts per stream at
-      ``retry_interval_s`` (reference: 3 @ 10 ms,
-      internal/sender/kinesis_sender.go:46-51).
+  K3  fixed-interval retry-- ``retries`` attempts per stream, with
+      ``retry_interval_s`` slept between two attempts (reference:
+      3 @ 10 ms, internal/sender/kinesis_sender.go:46-51).
   K4  alt-stream failover -- streams tried in config order; first
       full success wins (filter/stream_dispatcher.go:39-82).
   K5  partial failure     -- a chunk with failed records counts as an
@@ -17,11 +17,11 @@ Semantics reproduced:
       (internal/kinesis/kinesis.go:27).
 
 Senders are small picklable objects used from ``route_and_deliver``'s
-partition pass: one instance per executor partition, bounded
-buffering, no driver round-trips. ``DirSender`` writes JSON-lines
-files per stream (the integration-testable sink, mirroring the
-reference's read-back integration pattern); ``KinesisSender`` is
-gated behind boto3.
+partition pass: one instance per (partition, filter), each used from
+one thread, bounded buffering, no driver round-trips. ``DirSender``
+writes JSON-lines files per stream (the integration-testable sink,
+mirroring the reference's read-back integration pattern);
+``KinesisSender`` is gated behind boto3.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ import json
 import os
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from xmidt_event_streams_spark.operators.batching import (
@@ -40,6 +41,9 @@ from xmidt_event_streams_spark.operators.batching import (
 DEFAULT_RETRIES = 3  # internal/sender/kinesis_sender.go:20
 DEFAULT_RETRY_INTERVAL_S = 0.01  # 10 ms
 REFRESH_MARGIN_S = 180  # rebuild within 3 min of cred expiry, kinesis.go:323-337
+# Most filters one partition delivers at once, one thread each (the
+# reference gives every filter its own queue and workers).
+MAX_DELIVERY_THREADS = 8
 
 
 class RefreshingClientFactory:
@@ -86,7 +90,11 @@ class RefreshingClientFactory:
 class Sender:
     """Abstract put-records sink (the reference's KinesisClientAPI,
     internal/kinesis/kinesis.go:43-47). Returns the number of FAILED
-    records; raises on transport error."""
+    records; raises on transport error.
+
+    ``route_and_deliver`` builds one sender per (partition, filter)
+    and uses each from one thread only, so a sender needs no locking;
+    senders of different filters run concurrently."""
 
     def put_records(self, items: list[tuple[str, str]], stream: str) -> int:
         raise NotImplementedError
@@ -232,14 +240,18 @@ def deliver_batch(
 ) -> DeliveryResult:
     """K3-K6: chunk, then per chunk try each stream in order with
     fixed-interval retries; all-fail -> chunk dropped and counted
-    (reference: filter/stream_dispatcher.go:39-105). A put that raises
-    counts as a wholly failed put, and is counted in ``raised``."""
+    (reference: filter/stream_dispatcher.go:39-105). The interval is
+    slept between two attempts on a stream, never after its last one.
+    A put that raises counts as a wholly failed put, and is counted in
+    ``raised``."""
     res = DeliveryResult()
     for chunk in chunk_local(items, chunk_size):
         delivered = False
         for stream in streams_in_order:
             ok = False
-            for _attempt in range(max(1, retries)):
+            for attempt in range(max(1, retries)):
+                if attempt:
+                    time.sleep(retry_interval_s)
                 res.attempts += 1
                 try:
                     failed = sender.put_records(chunk, stream)
@@ -251,7 +263,6 @@ def deliver_batch(
                 if failed == 0:
                     ok = True
                     break
-                time.sleep(retry_interval_s)
             if ok:
                 delivered = True
                 break
@@ -284,19 +295,23 @@ def route_and_deliver(
     filters may share a primary stream but not their alts). A single
     ``mapPartitions`` pass groups each partition's rows by filter and
     calls :func:`deliver_batch` once per filter with that filter's
-    ``streams_in_order``. No shuffle, no explode: a row matched by
-    several filters carries the same payload to each, and delivery
-    parallelism = partition count. The pass returns one
-    :class:`DeliveryResult` per (partition, filter) to the driver; the
-    call returns their sum. (Not an Arrow pass such as
+    ``streams_in_order``, each filter on its own thread (at most
+    ``MAX_DELIVERY_THREADS``) with its own sender, so one filter's
+    retry sleeps never hold back another filter's puts. No shuffle, no
+    explode: a row matched by several filters carries the same payload
+    to each. The pass returns one :class:`DeliveryResult` per
+    (partition, filter) to the driver; the call returns their sum.
+    (Not an Arrow pass such as
     ``mapInPandas``: that loads pandas and pyarrow into every Python
     worker, about 50 MB of resident memory each, to move a few
     thousand string pairs per trigger.)
 
     The input is read once, so a caller that runs other actions over
     the same batch persists it first (``app._process`` does).
-    ``sender_factory`` is a picklable zero-arg callable constructed
-    once per partition (no shared driver state).
+    ``sender_factory`` is a picklable zero-arg callable, called once
+    per (partition, filter) with rows, on the partition's task thread
+    and never concurrently; each sender it returns is then used from
+    one delivery thread only (no shared driver state).
     """
     from pyspark.sql import functions as F
 
@@ -322,13 +337,19 @@ def route_and_deliver(
         for pk, payload, hits in rows:
             for i in hits:
                 by_filter[i].append((pk, payload))
-        sender = None
-        for items, streams in zip(by_filter, orders):
-            if items:
-                if sender is None:
-                    sender = sender_factory()
-                yield deliver_batch(
-                    items, streams, sender, retries, retry_interval_s
-                )
+        work = [
+            (items, streams, sender_factory())
+            for items, streams in zip(by_filter, orders)
+            if items
+        ]
+        if not work:
+            return []
+
+        def one(job):
+            items, streams, sender = job
+            return deliver_batch(items, streams, sender, retries, retry_interval_s)
+
+        with ThreadPoolExecutor(min(len(work), MAX_DELIVERY_THREADS)) as pool:
+            return list(pool.map(one, work))
 
     return sum(routed.rdd.mapPartitions(_deliver).collect(), DeliveryResult())
