@@ -21,7 +21,13 @@ from xmidt_event_streams_spark.sinks.writer import (
     MemorySender,
     deliver_batch,
     route_and_deliver,
+    routing_columns,
 )
+
+
+def _routed(df, filters):
+    """The raw rows with the routing columns route_and_deliver reads."""
+    return df.selectExpr(*routing_columns(filters, df.columns))
 
 
 class TestChunkArithmetic:
@@ -199,7 +205,8 @@ class TestRouteAndDeliver:
             FilterConfig("all-stream", events=(".*",)),
         )
         res = route_and_deliver(
-            df, filters, DirSenderFactory(str(tmp_path)), retry_interval_s=0
+            _routed(df, filters), filters, DirSenderFactory(str(tmp_path)),
+            retry_interval_s=0,
         )
         assert res.delivered == 3 and res.dropped == 0 and res.raised == 0
         by_stream = {}
@@ -224,12 +231,13 @@ class TestRouteAndDeliver:
             "dest string, source string, session_id string",
         )
         filters = [FilterConfig(f"s{i}", events=(".*",)) for i in range(n_filters)]
+        routed = _routed(df, filters)
         results = []
         jobs = count_jobs(
             spark,
             lambda: results.append(
                 route_and_deliver(
-                    df, filters, DirSenderFactory(str(tmp_path)), retry_interval_s=0
+                    routed, filters, DirSenderFactory(str(tmp_path)), retry_interval_s=0
                 )
             ),
         )
@@ -249,7 +257,8 @@ class TestRouteAndDeliver:
             FilterConfig("down", events=("device-status.*",)),
         )
         res = route_and_deliver(
-            df, filters, _down_dir_factory(str(tmp_path), {"down"}), retry_interval_s=0
+            _routed(df, filters), filters, _down_dir_factory(str(tmp_path), {"down"}),
+            retry_interval_s=0,
         )
         assert res.delivered == 4 and res.dropped == 4
         # one chunk per (partition, filter): 3 tries on the down
@@ -273,7 +282,8 @@ class TestRouteAndDeliver:
             FilterConfig("b", events=(".*",)),
         )
         route_and_deliver(
-            fix_wrp(df), filters, DirSenderFactory(str(tmp_path)), retry_interval_s=0
+            _routed(fix_wrp(df), filters), filters, DirSenderFactory(str(tmp_path)),
+            retry_interval_s=0,
         )
         sink = _read_sink(tmp_path)
         uuids = {s: [p["transaction_uuid"] for _, p in sink[s]] for s in ("a", "b")}
@@ -302,7 +312,9 @@ class TestRouteAndDeliver:
         factory = _rendezvous_factory(
             str(sink_root), str(tmp_path / "signalled"), "waits", "signals"
         )
-        res = route_and_deliver(df, filters, factory, retries=1, retry_interval_s=0)
+        res = route_and_deliver(
+            _routed(df, filters), filters, factory, retries=1, retry_interval_s=0
+        )
         assert res.dropped == 0 and res.delivered == 2
         sink = _read_sink(sink_root)
         assert [p["dest"] for _, p in sink["waits"]] == ["event:device-status/m1"]
@@ -323,7 +335,8 @@ class TestRouteAndDeliver:
             FilterConfig("shared", events=("boot-time.*",), alt_streams=("alt-b",)),
         )
         res = route_and_deliver(
-            df, filters, _down_dir_factory(str(tmp_path), {"shared"}), retry_interval_s=0
+            _routed(df, filters), filters, _down_dir_factory(str(tmp_path), {"shared"}),
+            retry_interval_s=0,
         )
         sink = _read_sink(tmp_path)
         assert set(sink) == {"alt-a", "alt-b"}

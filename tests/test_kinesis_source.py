@@ -61,6 +61,7 @@ def test_round_trip_through_chunked_sender(spark, tmp_path):
     from xmidt_event_streams_spark.sinks.writer import (
         DirSenderFactory,
         route_and_deliver,
+        routing_columns,
     )
 
     events = [
@@ -86,7 +87,8 @@ def test_round_trip_through_chunked_sender(spark, tmp_path):
     fc = FilterConfig(
         stream_name="wrp-out", events=["device-status.*"], dest_type="kinesis"
     )
-    route_and_deliver(batch, [fc], DirSenderFactory(sink_root))
+    routed = batch.selectExpr(*routing_columns([fc], batch.columns))
+    route_and_deliver(routed, [fc], DirSenderFactory(sink_root))
 
     # reload DirSender's jsonl puts as Kinesis-shaped records
     recs = []

@@ -20,6 +20,7 @@ from xmidt_event_streams_spark.sinks.writer import (
     DirSender,
     DirSenderFactory,
     route_and_deliver,
+    routing_columns,
 )
 from xmidt_event_streams_spark.streaming.metrics import GaugeListener
 from xmidt_event_streams_spark.streaming.router import read_wrp_stream
@@ -73,8 +74,9 @@ def test_admission_routing_gauges_compose(spark, tmp_path):
             admitted, rejected = admission_control(
                 batch_df, max_outstanding=5, order_col="session_id", mode="exact"
             )
+            fixed = fix_wrp(admitted.filter(valid_msg_type("msg_type")))
             route_and_deliver(
-                fix_wrp(admitted.filter(valid_msg_type("msg_type"))),
+                fixed.selectExpr(*routing_columns(filters, fixed.columns)),
                 filters,
                 DirSenderFactory(str(out)),
             )

@@ -7,23 +7,35 @@ Spark building blocks.
 (streams_only.yaml shape -- or a parsed dict, or compiled
 FilterConfigs) and stands up the full data plane:
 
-    durable source -> batch persisted once -> V3/V4/V7 reject split
-    -> V6 fixWrp enrichment -> R1-R4 regex fan-out -> B6/K6 chunked
-    delivery with K3 retry / K4 failover -> reject ledger write
-    (idempotent per batch) -> M4/M5 gauges observed per trigger.
+    durable source -> V3/V4/V7 reject split -> V6 fixWrp enrichment
+    -> R1-R4 regex fan-out -> B6/K6 chunked delivery with K3 retry /
+    K4 failover -> reject ledger write (idempotent per batch) -> M4/M5
+    gauges observed per trigger.
 
-Each trigger runs two Spark jobs over one cached read of its batch:
-the delivery job (every filter in one pass, ``route_and_deliver``)
-and then the ledger write, which stays off the delivery latency path.
-The source scan, and with it the M4/M5 gauges, counts each input row
-once.
+Planned once, when the query starts (as the reference compiles its
+filters once at start-up): the reject split, fixWrp and the routing
+columns are ONE ``select`` over the streaming source. It keeps the raw
+WRP columns, adds ``reject_reason``, and adds the three columns
+delivery reads (``sinks.writer.routing_columns``): the partition key,
+the payload (the JSON of the fixWrp'd row) and the matched filter
+ordinals. Structured Streaming plans that projection
+incrementally, so no trigger rebuilds it through py4j.
+
+Per trigger (``_process``): persist the batch; run the optional
+``expectations``, which stay per trigger because their ``unique``
+check is a window that a streaming plan rejects; deliver the accepted
+rows; append the rejected rows (raw values and reason) to the ledger.
+That is two Spark jobs over one cached read of the batch: the delivery
+job (every filter in one pass, ``route_and_deliver``) and then the
+ledger write, which stays off the delivery latency path. The source
+scan, and with it the M4/M5 gauges, counts each input row once.
 
 One streaming query, one checkpoint: the reject split and delivery
 happen inside the same micro-batch transaction, so a replayed batch
 re-splits and re-delivers the same rows (rejects idempotent by batch
 id; delivery at-least-once with the transaction_uuid dedup key
 downstream -- the same effectively-once posture as
-streaming/router.py, which this composes rather than replaces).
+streaming/router.py).
 
 The HTTP control plane (auth, servers) stays out of scope per
 SURVEY.md §2.9 -- the data plane starts at the durable source.
@@ -44,6 +56,7 @@ from xmidt_event_streams_spark.enrich import classify_rejects, fix_wrp
 from xmidt_event_streams_spark.sinks.writer import (
     DirSenderFactory,
     route_and_deliver,
+    routing_columns,
 )
 from xmidt_event_streams_spark.streaming.ingest_dedup import (
     idempotent_batch_append,
@@ -116,39 +129,46 @@ def run_app(
 
         stream = with_gauges(stream, name=query_name)
 
+    raw_cols = stream.columns
+    plan = stream.selectExpr(
+        *classify_rejects(raw_cols, required_cols=required_cols),
+        *routing_columns(filters, fix_wrp(raw_cols)),
+    )
+    ledger_cols = [*raw_cols, "reject_reason"]
+
     def _process(batch_df, batch_id: int) -> None:
-        # the reject split, the delivery and the ledger all read this
-        # one cached relation: the source is scanned once per trigger
+        # delivery and the ledger both read this one cached relation:
+        # the source is scanned once per trigger
         batch_df.persist()
         try:
-            tagged = classify_rejects(batch_df, required_cols=required_cols)
-            accepted = tagged.filter(F.col("reject_reason") == "")
-            rejected = tagged.filter(F.col("reject_reason") != "")
+            ok = F.col("reject_reason") == ""
+            accepted = batch_df.filter(ok)
+            unexpected = None
             if expectations:
                 from xmidt_event_streams_spark.expectations import (
                     VIOLATIONS_COL,
                     with_violations,
                 )
 
-                ann = with_violations(
-                    accepted.drop("reject_reason"), expectations
+                ann = with_violations(accepted, expectations)
+                unexpected = ann.filter(F.size(VIOLATIONS_COL) > 0).select(
+                    *raw_cols,
+                    F.concat_ws(",", F.col(VIOLATIONS_COL)).alias("reject_reason"),
                 )
-                bad = ann.filter(F.size(VIOLATIONS_COL) > 0).withColumn(
-                    "reject_reason", F.concat_ws(",", F.col(VIOLATIONS_COL))
-                ).drop(VIOLATIONS_COL)
-                rejected = rejected.unionByName(bad)
-                accepted = ann.filter(F.size(VIOLATIONS_COL) == 0).drop(
-                    VIOLATIONS_COL
-                ).withColumn("reject_reason", F.lit(""))
-            route_and_deliver(
-                fix_wrp(accepted.drop("reject_reason")), filters, sender_factory
-            )
+                accepted = ann.filter(F.size(VIOLATIONS_COL) == 0)
+            route_and_deliver(accepted, filters, sender_factory)
             if rejects_path is not None:
-                idempotent_batch_append(rejected, batch_id, rejects_path)
+                # built after delivery: off the delivery latency path
+                rejected = batch_df.filter(~ok).select(*ledger_cols)
+                if unexpected is not None:
+                    rejected = rejected.unionByName(unexpected)
+                idempotent_batch_append(
+                    rejected, batch_id, rejects_path, max_files=1
+                )
         finally:
             batch_df.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_process).option(
+    writer = plan.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
     ).queryName(query_name)
     if availableNow:

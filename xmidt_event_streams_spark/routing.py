@@ -92,6 +92,11 @@ def strip_event_prefix(dest: Column | str) -> Column:
     return F.regexp_replace(dest, _STRIP_RE, "")
 
 
+def strip_event_prefix_sql(dest: str) -> str:
+    """:func:`strip_event_prefix` of the column named ``dest``, in SQL text."""
+    return f"regexp_replace(`{dest}`, {sql_string_literal(_STRIP_RE)}, '')"
+
+
 def event_predicate(fc: FilterConfig, dest: Column | str) -> Column:
     """R2: OR over event regexes against the stripped destination."""
     stripped = strip_event_prefix(dest)
@@ -207,13 +212,9 @@ def route_union(
         # operator node (~0.09 s per build at the default filter set).
         # Config patterns travel as lossless \uXXXX literals
         # (sql_string_literal above).
-        matched_sql = matched_streams_sql(filters, stripped_col, source)
+        matched_sql = matched_streams_sql(filters, f"`{stripped_col}`", f"`{source}`")
         return (
-            df.selectExpr(
-                "*",
-                f"regexp_replace(`{dest}`, "
-                f"{sql_string_literal(_STRIP_RE)}, '') as `{stripped_col}`",
-            )
+            df.selectExpr("*", f"{strip_event_prefix_sql(dest)} as `{stripped_col}`")
             .selectExpr("*", f"explode({matched_sql}) as `{stream_col}`")
             .drop(stripped_col)
         )
@@ -238,17 +239,19 @@ def route_union(
 
 def matched_streams_sql(
     filters: Iterable[FilterConfig],
-    stripped_col: str,
+    stripped: str,
     source: str,
     labels: Iterable[str] | None = None,
 ) -> str:
     """The matched-streams array expression in SQL text: the exact
     SQL-text twin of the Column composition in :func:`route_union`
-    (array_compact over one CASE per filter).
+    (array_compact over one CASE per filter). ``stripped`` (the
+    destination without its ``event:`` prefix) and ``source`` are SQL
+    expressions, such as a backticked column name.
 
     ``labels`` are the SQL literals the array holds, one per filter in
     filter order; the default is each filter's stream name.
-    ``sinks.writer.route_and_deliver`` passes filter ordinals instead,
+    ``sinks.writer.routing_columns`` passes filter ordinals instead,
     since two filters may share a primary stream but not their alts."""
     filters = list(filters)
     if labels is None:
@@ -256,15 +259,14 @@ def matched_streams_sql(
     items = []
     for fc, label in zip(filters, labels):
         ev = " OR ".join(
-            f"`{stripped_col}` rlike {sql_string_literal(p)}"
-            for p in fc.events
+            f"{stripped} rlike {sql_string_literal(p)}" for p in fc.events
         )
         pred = f"({ev})"
         matchers = fc.effective_device_ids
         if matchers:
             dv = " OR ".join(
-                f"`{source}` rlike {sql_string_literal(p)} OR "
-                f"`{stripped_col}` rlike {sql_string_literal(p)}"
+                f"{source} rlike {sql_string_literal(p)} OR "
+                f"{stripped} rlike {sql_string_literal(p)}"
                 for p in matchers
             )
             pred = f"{pred} AND ({dv})"

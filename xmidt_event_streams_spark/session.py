@@ -51,9 +51,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """The library's session: ``local[SPARK_GRAFT_CPUS]`` (default 32)
-    unless ``master`` is given, with the defaults in the module
-    docstring; ``extra_conf`` entries are applied last.
+    """The library's session: ``local[SPARK_GRAFT_CPUS]`` (default: the
+    cores this process may run on) unless ``master`` is given, with the
+    defaults in the module docstring; ``extra_conf`` entries are
+    applied last.
 
     Executors start their Python workers through
     :mod:`xmidt_event_streams_spark.pyworker` (``spark.python.daemon.module``),
@@ -67,7 +68,7 @@ def get_spark(
     executors' environment (``addPyFile`` comes too late). A vanilla
     session, such as the driver contract's, keeps pyspark's daemon.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -214,7 +215,7 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
         path = f"{sf_dir}/{name}.parquet"
         df, schema = _read_parquet_with_schema(spark, path)
         df = _normalize_nanos_from_schema(df, schema)
-        stamp = (path, _path_stamp(path))
+        stamp = (path, _path_stamp(path.removeprefix("file://")))
         if seen_views.get(name) != stamp:
             df.createOrReplaceTempView(name)
             seen_views[name] = stamp

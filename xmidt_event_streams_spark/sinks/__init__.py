@@ -5,6 +5,7 @@ from xmidt_event_streams_spark.sinks.writer import (
     Sender,
     deliver_batch,
     route_and_deliver,
+    routing_columns,
 )
 
 __all__ = [
@@ -14,4 +15,5 @@ __all__ = [
     "Sender",
     "deliver_batch",
     "route_and_deliver",
+    "routing_columns",
 ]

@@ -44,6 +44,10 @@ REFRESH_MARGIN_S = 180  # rebuild within 3 min of cred expiry, kinesis.go:323-33
 # Most filters one partition delivers at once, one thread each (the
 # reference gives every filter its own queue and workers).
 MAX_DELIVERY_THREADS = 8
+# The names of routing_columns' (key, payload, matched) columns,
+# underscored so that they stay clear of the envelope's own columns
+# (the WRP schema has a ``payload``).
+ROUTING_COLS = ("_pk", "_payload", "_matched")
 
 
 class RefreshingClientFactory:
@@ -274,28 +278,69 @@ def deliver_batch(
     return res
 
 
+def routing_columns(
+    filters,
+    payload_cols,
+    key_col: str = "session_id",
+    dest_col: str = "dest",
+    source_col: str = "source",
+) -> list[str]:
+    """The three columns :func:`route_and_deliver` reads, as SQL
+    expressions for a ``selectExpr`` over the rows to deliver (named
+    ``ROUTING_COLS``):
+
+    * ``_pk`` -- the K2 partition key, ``key_col`` as a string;
+    * ``_payload`` -- the K1 JSON of ``payload_cols``, serialized in
+      that order by ``to_json`` on the JVM side. They are SQL
+      expressions: plain column names, or named expressions such as
+      ``enrich.fix_wrp``'s (``app.run_app`` passes the fixWrp'd row);
+    * ``_matched`` -- the row's array of matched filter ordinals
+      (``route_union``'s matched-array shape, evaluated against
+      ``dest_col`` without its ``event:`` prefix and ``source_col``).
+      Ordinals rather than stream names, since two filters may share a
+      primary stream but not their alts.
+
+    SQL text is one parse, where a Column composition costs a py4j call
+    per node. Streaming and batch plans take the same columns:
+    ``app.run_app`` and ``streaming.router.start_routing`` put them in
+    their query's plan once, at query start, so no trigger rebuilds
+    them.
+    """
+    from xmidt_event_streams_spark.routing import (
+        matched_streams_sql,
+        strip_event_prefix_sql,
+    )
+
+    filters = tuple(filters)
+    matched = matched_streams_sql(
+        filters,
+        strip_event_prefix_sql(dest_col),
+        f"`{source_col}`",
+        labels=map(str, range(len(filters))),
+    )
+    pk, payload, hits = ROUTING_COLS
+    return [
+        f"CAST(`{key_col}` AS STRING) AS {pk}",
+        f"to_json(struct({', '.join(payload_cols)})) AS {payload}",
+        f"{matched} AS {hits}",
+    ]
+
+
 def route_and_deliver(
-    batch_df,
+    routed_df,
     filters,
     sender_factory,
     retries: int = DEFAULT_RETRIES,
     retry_interval_s: float = DEFAULT_RETRY_INTERVAL_S,
-    key_col: str = "session_id",
-    dest_col: str = "dest",
-    source_col: str = "source",
 ) -> DeliveryResult:
-    """The foreachBatch body: fan-out + serialize declaratively
-    (JVM-side), deliver imperatively (executor-side Python), in ONE
-    Spark job whatever the filter count.
+    """Deliver every row of ``routed_df`` to each filter it matched, in
+    ONE Spark job whatever the filter count.
 
-    Scale shape: one narrow projection serializes each row once into
-    its (pk, payload) pair and evaluates every filter's predicate into
-    the row's array of matched filter ordinals (``route_union``'s
-    matched-array shape; ordinals rather than stream names, since two
-    filters may share a primary stream but not their alts). A single
-    ``mapPartitions`` pass groups each partition's rows by filter and
-    calls :func:`deliver_batch` once per filter with that filter's
-    ``streams_in_order``, each filter on its own thread (at most
+    ``routed_df`` holds the :func:`routing_columns` built over the
+    same ``filters``, in the same order; its other columns are
+    ignored. A single ``mapPartitions`` pass groups each partition's
+    rows by filter and calls :func:`deliver_batch` once per filter with
+    that filter's ``streams_in_order``, each filter on its own thread (at most
     ``MAX_DELIVERY_THREADS``) with its own sender, so one filter's
     retry sleeps never hold back another filter's puts. No shuffle, no
     explode: a row matched by several filters carries the same payload
@@ -313,24 +358,7 @@ def route_and_deliver(
     and never concurrently; each sender it returns is then used from
     one delivery thread only (no shared driver state).
     """
-    from pyspark.sql import functions as F
-
-    from xmidt_event_streams_spark.routing import (
-        matched_streams_sql,
-        strip_event_prefix,
-    )
-
-    filters = tuple(filters)
     orders = [fc.streams_in_order for fc in filters]
-    matched = matched_streams_sql(
-        filters, "stripped", "source", labels=map(str, range(len(filters)))
-    )
-    routed = batch_df.select(
-        F.col(key_col).cast("string").alias("pk"),
-        F.to_json(F.struct(*batch_df.columns)).alias("payload"),
-        F.col(source_col).alias("source"),
-        strip_event_prefix(dest_col).alias("stripped"),
-    ).selectExpr("pk", "payload", f"{matched} AS matched")
 
     def _deliver(rows):
         by_filter: list[list[tuple[str, str]]] = [[] for _ in orders]
@@ -352,4 +380,5 @@ def route_and_deliver(
         with ThreadPoolExecutor(min(len(work), MAX_DELIVERY_THREADS)) as pool:
             return list(pool.map(one, work))
 
-    return sum(routed.rdd.mapPartitions(_deliver).collect(), DeliveryResult())
+    rows = routed_df.select(*ROUTING_COLS).rdd
+    return sum(rows.mapPartitions(_deliver).collect(), DeliveryResult())

@@ -65,7 +65,9 @@ def idempotent_batch_append(
     months of 15 s triggers at 100 TB means millions of small files.
     A micro-batch is small by definition, so a handful of writer tasks
     is the right shape; :func:`compact_ingest_sink` handles the
-    long-horizon file count."""
+    long-horizon file count. The reject ledger (``app.run_app``) passes
+    ``max_files=1``: its rows are a small share of one trigger, and one
+    writer task per append is the cheapest write."""
     (
         df.coalesce(max_files)
         .withColumn("_ingest_batch_id", F.lit(batch_id))

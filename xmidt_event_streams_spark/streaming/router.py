@@ -11,7 +11,9 @@ The reference's pipeline stages map as:
   fan-out+queues (R1, B*) -> foreachBatch micro-batches; trigger
                              replaces the size/time hybrid flush
                              (B2/B3); checkpoint replaces B7.
-  delivery (K1-K6)        -> route_and_deliver (chunk/retry/failover).
+  delivery (K1-K6)        -> routing_columns, planned once per query,
+                             then route_and_deliver per trigger
+                             (chunk/retry/failover).
 
 Exactly-once story: checkpointed source offsets + at-least-once
 delivery + downstream dedup key (transaction_uuid) =
@@ -27,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from xmidt_event_streams_spark.config import FilterConfig
 from xmidt_event_streams_spark.schema import WRP_SCHEMA
-from xmidt_event_streams_spark.sinks.writer import route_and_deliver
+from xmidt_event_streams_spark.sinks.writer import route_and_deliver, routing_columns
 
 DEFAULT_TRIGGER_SECONDS = 15  # DefaultBatchTimeLimitSeconds, queue.go:25
 
@@ -85,6 +87,8 @@ def start_routing(
         from xmidt_event_streams_spark.streaming.metrics import with_gauges
 
         df = with_gauges(df, name=query_name or "queue")
+    # planned once: no trigger rebuilds the routing projection
+    df = df.selectExpr(*routing_columns(filters, df.columns))
 
     def _process(batch_df: DataFrame, _batch_id: int) -> None:
         route_and_deliver(batch_df, filters, sender_factory)
